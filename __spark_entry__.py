@@ -4,7 +4,7 @@
 §2 plus the training-data operators (dedup / similarity / text analysis /
 multimodal); ``oracle_sql()`` gives the DuckDB-equivalent SQL the driver
 cross-checks at sf=0.01. Entries without an oracle are genuinely
-non-SQL-portable (xxhash64 / FNV fingerprints, pandas-UDF simhash,
+non-SQL-portable (xxhash64 / FNV fingerprints, Arrow-UDF simhash,
 generated media) and get the rows-only check.
 
 Numeric-stability rules used throughout so Spark and DuckDB hash
@@ -1522,7 +1522,7 @@ def _q_dedup_ngram_jaccard(spark, sf_dir):
 
 
 def _q_simhash(spark, sf_dir):
-    # pandas-UDF FNV/simhash — not expressible portably in SQL → rows-only
+    # Arrow-UDF simhash — not expressible portably in SQL → rows-only
     from logstash_integration_jdbc_spark.operators.dedup import simhash_near_dups
 
     docs = _t(spark, sf_dir, "documents")

@@ -8,8 +8,12 @@ bytes. It exists so DuckDB-side oracles for xxhash64-based operators
 implementation rather than trusting the Spark path being tested;
 parity with Spark is pinned in tests/test_xxhash.py.
 
-Per-call pure Python is plenty for oracle-sized corpora; the engine's
-hot path stays on the JVM's xxhash64.
+Per-call pure Python is plenty for oracle-sized corpora. The numpy
+twins ``xxh64_long_np`` / ``spark_xxhash64_longs_np`` are the one
+vectorized XXH64 the Arrow kernels use (minhash band buckets, winnow
+gram hashes): one batch-wide pass per chained long instead of one
+Python call per value; their parity with the scalar forms is pinned in
+tests/test_xxhash.py.
 """
 
 from __future__ import annotations
@@ -100,6 +104,39 @@ def spark_xxhash64_longs(vals: list[int]) -> int:
     for v in vals:
         h = xxh64_long(v, h)
     return h - (1 << 64) if h >= (1 << 63) else h
+
+
+def xxh64_long_np(k, seed):
+    """Vectorized ``xxh64_long``: Spark's ``XXH64.hashLong`` of every
+    int64 in ``k`` under the matching uint64 ``seed`` (array or scalar);
+    uint64 out, so results chain as seeds."""
+    import numpy as np
+
+    p1, p2, p3, p4, p5 = (np.uint64(p) for p in (_P1, _P2, _P3, _P4, _P5))
+
+    def rotl(x, r):
+        return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
+
+    with np.errstate(over="ignore"):
+        h = np.asarray(seed, dtype=np.uint64) + p5 + np.uint64(8)
+        h = h ^ (rotl(np.asarray(k).astype(np.uint64) * p2, 31) * p1)
+        h = rotl(h, 27) * p1 + p4
+        h ^= h >> np.uint64(33)
+        h *= p2
+        h ^= h >> np.uint64(29)
+        h *= p3
+        h ^= h >> np.uint64(32)
+    return h
+
+
+def spark_xxhash64_longs_np(cols):
+    """Vectorized ``spark_xxhash64_longs``: ``xxhash64(c1, c2, ...)`` over
+    equal-shape int64 arrays, folded with the running hash as seed from
+    42; signed int64 out."""
+    h = 42
+    for c in cols:
+        h = xxh64_long_np(c, h)
+    return h.view("int64")
 
 
 def spark_ws_tokens(text: str) -> list[str]:

@@ -23,17 +23,6 @@ def hourly_counts(df: DataFrame, ts_col: str = "ts",
     )
 
 
-def windowed_counts(df: DataFrame, ts_col: str = "ts", window: str = "1 hour",
-                    keys: tuple[str, ...] = ("role", "tool")) -> DataFrame:
-    """Same via Spark's window() — tumbling windows of arbitrary width."""
-    return (
-        df.groupBy(*keys, F.window(F.col(ts_col), window).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_turns"))
-        .select(*keys, F.col("w.start").alias("window_start"),
-                F.col("w.end").alias("window_end"), "n_turns")
-    )
-
-
 def sessionize_native(df: DataFrame, key_col: str = "user_id",
                       ts_col: str = "ts", gap: str = "30 minutes") -> DataFrame:
     """Per-session rows (key, session_start, session_end, n_events) via

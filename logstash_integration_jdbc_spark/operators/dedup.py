@@ -2,9 +2,11 @@
 
 Not in the reference (it has no dedup); required first-class components
 for the 100 TB training-data story. All exact/minhash/ngram paths are
-pure Catalyst expressions (codegen, no Python); simhash uses a
-numpy-vectorized Arrow pandas UDF (bit-twiddling built-ins can't express
-it cleanly).
+pure Catalyst expressions (codegen, no Python) in their reference
+forms; the production signature, band-bucket, winnow and simhash
+kernels are numpy-vectorized Arrow UDFs on ``functions.arrow_kernels``
+(bit-twiddling built-ins can't express them cleanly, and interpreted
+higher-order expressions are ~50× slower).
 
 Scale design notes:
 - exact dedup shuffles on a 256-bit digest of the text, never the text
@@ -20,10 +22,14 @@ Scale design notes:
 
 from __future__ import annotations
 
-import pandas as pd
+import functools
+
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+
+from ..functions.arrow_kernels import Ragged, list_udf, segment_reduce
+from ..functions.xxhash import spark_xxhash64_longs_np
 
 # Mersenne prime 2^31-1: with 31-bit coefficients and 31-bit-folded
 # shingle hashes, a·h+b < 2^62 stays exact in BIGINT (no silent wrap).
@@ -173,74 +179,47 @@ def minhash_signature(shingles: Column, num_hashes: int = 64) -> Column:
     return F.array(*sigs)
 
 
-_SIG_UDFS: dict[int, object] = {}
+def _signature_matrix(rows: Ragged, num_hashes: int) -> np.ndarray:
+    """(rows × num_hashes) minhash signatures of a shingle-hash batch —
+    the ``minhash_signature`` values for every non-empty row (empty and
+    null rows hold ``_P``, which no real signature value reaches).
 
-
-def minhash_signature_udf(num_hashes: int = 64):
-    """Arrow pandas UDF computing the SAME signature as
-    `minhash_signature`, numpy-vectorized across the whole batch.
-
-    The batch's shingle arrays are flattened once; per permutation k we
-    compute (h·a_k + b_k) mod P over the flat vector and segment-min with
-    `np.minimum.reduceat` — O(total_shingles) per permutation with no
-    Python-level row loop. h < 2^31 and a_k < 2^31 keep the product exact
-    in int64. Memory stays O(total_shingles) (per-permutation passes, not
-    a (total × num_hashes) matrix), so executor batches never balloon.
-    """
-    if num_hashes in _SIG_UDFS:
-        return _SIG_UDFS[num_hashes]
-
-    import numpy as np
-
+    Per permutation k: (h·a_k + b_k) mod P over the flat vector, then one
+    segment min — O(total_shingles) per permutation, no Python row loop.
+    h < 2^31 and a_k < 2^31 keep the product exact in int64. Memory stays
+    O(total_shingles): per-permutation passes, never a
+    (total × num_hashes) matrix."""
     coeffs = _perm_coeffs(num_hashes)
-    A = np.array([a for a, _ in coeffs], dtype=np.int64)
-    B = np.array([b for _, b in coeffs], dtype=np.int64)
+    hm = rows.values % _P  # numpy % matches pmod (non-negative) for positive divisor
+    sig = np.empty((len(rows.lengths), num_hashes), dtype=np.int64)
+    # NOTE (r6): a Mersenne-fold replacement for `% _P` was benchmarked
+    # and REVERTED — the loop is memory-bandwidth bound (3 passes over
+    # the flat vector per permutation), so trading one modulo pass for
+    # four cheap passes measured ~10% SLOWER. Kept as the minimal-pass form.
+    for k, (a, b) in enumerate(coeffs):
+        sig[:, k] = segment_reduce(np.minimum, (hm * a + b) % _P, rows.lengths, _P)
+    return sig
 
-    @pandas_udf("array<bigint>")
-    def _sig(sh: pd.Series) -> pd.Series:
-        n = len(sh)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        # null/empty shingle arrays → [null]*num_hashes, matching the
-        # expression form (array_min over empty/null transform). Masked out
-        # before reduceat: a zero-length segment would otherwise alias the
-        # next row's first hash (or raise on a trailing empty row).
-        lens = np.fromiter((0 if x is None else len(x) for x in sh),
-                           dtype=np.int64, count=n)
-        nz = lens > 0
-        result: list = [None] * n
-        null_sig = [None] * num_hashes
-        for i in np.flatnonzero(~nz):
-            result[i] = null_sig
-        if nz.any():
-            flat = np.concatenate(
-                [np.asarray(x, dtype=np.int64) for x in sh if x is not None and len(x)]
-            )
-            hm = flat % _P  # numpy % matches pmod (non-negative) for positive divisor
-            m = int(nz.sum())
-            offsets = np.zeros(m, dtype=np.int64)
-            np.cumsum(lens[nz][:-1], out=offsets[1:])
-            out = np.empty((m, num_hashes), dtype=np.int64)
-            # NOTE (r6): a Mersenne-fold replacement for `% _P` was
-            # benchmarked and REVERTED — the loop is memory-bandwidth
-            # bound (3 passes over the flat vector per permutation), so
-            # trading one modulo pass for four cheap passes measured
-            # ~10% SLOWER. Kept as the minimal-pass form.
-            for k in range(num_hashes):
-                out[:, k] = np.minimum.reduceat((hm * A[k] + B[k]) % _P, offsets)
-            for j, i in enumerate(np.flatnonzero(nz)):
-                result[i] = out[j]
-        return pd.Series(result)
 
-    _SIG_UDFS[num_hashes] = _sig
+@functools.cache
+def minhash_signature_udf(num_hashes: int = 64):
+    """Arrow UDF computing the SAME signature as `minhash_signature`,
+    numpy-vectorized across the whole batch (``_signature_matrix``).
+    Null/empty shingle arrays → [null]*num_hashes, matching the
+    expression form (array_min over an empty/null transform)."""
+
+    @list_udf("array<bigint>")
+    def _sig(rows: Ragged):
+        sig = _signature_matrix(rows, num_hashes)
+        return np.ma.masked_array(sig, np.broadcast_to(
+            (rows.lengths == 0)[:, None], sig.shape))
+
     return _sig
 
 
-_BUCKET_UDFS: dict[tuple[int, int], object] = {}
-
-
+@functools.cache
 def minhash_band_bucket_udf(num_hashes: int = 64, bands: int = 16):
-    """Arrow pandas UDF: shingle-hash array → per-band LSH bucket keys.
+    """Arrow UDF: shingle-hash array → per-band LSH bucket keys.
 
     Fuses ``minhash_signature_udf`` with the band hashing (guide §4.1:
     control what crosses the Python boundary): the (rows × num_hashes)
@@ -248,90 +227,28 @@ def minhash_band_bucket_udf(num_hashes: int = 64, bands: int = 16):
     per doc return over Arrow — ¼ of the bytes at 64/16. The bucket
     value is SPARK-PARITY ``xxhash64`` over the band's signature values
     as BIGINTs — the chained 8-byte XXH64 (running seed from 42) that
-    ``F.xxhash64(sig[i], ..., sig[i+r-1])`` computes, vectorized with
-    numpy uint64 wraparound arithmetic; parity is pinned against the
-    JVM expression in test_dedup. Rows with null/empty shingles emit
-    the all-null-input value (the seed, 42) for every band, matching
-    the JVM's skip-null fold over an all-null signature.
+    ``F.xxhash64(sig[i], ..., sig[i+r-1])`` computes, evaluated for all
+    bands at once by ``spark_xxhash64_longs_np``; parity is pinned
+    against the JVM expression in test_dedup. Rows with null/empty
+    shingles emit the all-null-input value (the seed, 42) for every
+    band, matching the JVM's skip-null fold over an all-null signature.
     """
-    key = (num_hashes, bands)
-    if key in _BUCKET_UDFS:
-        return _BUCKET_UDFS[key]
+    r = num_hashes // bands
 
-    import numpy as np
-
-    coeffs = _perm_coeffs(num_hashes)
-    A = np.array([a for a, _ in coeffs], dtype=np.int64)
-    B = np.array([b for _, b in coeffs], dtype=np.int64)
-    rows_per_band = num_hashes // bands
-
-    _P1 = np.uint64(11400714785074694791)
-    _P2 = np.uint64(14029467366897019727)
-    _P3 = np.uint64(1609587929392839161)
-    _P4 = np.uint64(9650029242287828579)
-    _P5 = np.uint64(2870177450012600261)
-
-    def _rotl(x, r):
-        r = np.uint64(r)
-        return (x << r) | (x >> (np.uint64(64) - r))
-
-    def _xxh64_long(k_i64, seed_u64):
-        # XXH64 of one LongType value (8 little-endian bytes) with a
-        # vector of running seeds — Spark's XXH64.hashLong, vectorized.
-        k = k_i64.astype(np.uint64)
-        h = seed_u64 + _P5 + np.uint64(8)
-        h = h ^ (_rotl(k * _P2, 31) * _P1)
-        h = _rotl(h, 27) * _P1 + _P4
-        h ^= h >> np.uint64(33)
-        h *= _P2
-        h ^= h >> np.uint64(29)
-        h *= _P3
-        h ^= h >> np.uint64(32)
-        return h
-
-    @pandas_udf("array<bigint>")
-    def _buckets(sh: pd.Series) -> pd.Series:
-        n = len(sh)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        lens = np.fromiter((0 if x is None else len(x) for x in sh),
-                           dtype=np.int64, count=n)
-        nz = lens > 0
-        result: list = [None] * n
-        null_buckets = [42] * bands  # xxhash64 over all-null = seed
-        for i in np.flatnonzero(~nz):
-            result[i] = null_buckets
-        if nz.any():
-            flat = np.concatenate(
-                [np.asarray(x, dtype=np.int64) for x in sh if x is not None and len(x)]
-            )
-            hm = flat % _P
-            m = int(nz.sum())
-            offsets = np.zeros(m, dtype=np.int64)
-            np.cumsum(lens[nz][:-1], out=offsets[1:])
-            sig = np.empty((m, num_hashes), dtype=np.int64)
-            for k in range(num_hashes):
-                sig[:, k] = np.minimum.reduceat((hm * A[k] + B[k]) % _P, offsets)
-            buckets = np.empty((m, bands), dtype=np.int64)
-            with np.errstate(over="ignore"):
-                for b in range(bands):
-                    h = np.full(m, 42, dtype=np.uint64)
-                    for r in range(rows_per_band):
-                        h = _xxh64_long(sig[:, b * rows_per_band + r], h)
-                    buckets[:, b] = h.astype(np.int64)
-            for j, i in enumerate(np.flatnonzero(nz)):
-                result[i] = buckets[j]
-        return pd.Series(result)
-
-    # Optimizer fence (guide §4.4): without this, the plan duplicates
+    # Optimizer fence (guide §4.4): without it, the plan duplicates
     # the ArrowEvalPython below the spread exchange with the WHOLE
     # shingle pipeline inlined into the UDF argument — the inlined
     # higher-order form re-evaluates the token-hash array per element
     # (O(words²), the exact trap the gram_hashes docstring documents)
-    # and ran 5× slower at 1M docs. The function is semantically
-    # deterministic; the flag only blocks re-ordering/duplication.
-    _buckets = _buckets.asNondeterministic()
-    _BUCKET_UDFS[key] = _buckets
+    # and ran 5× slower at 1M docs.
+    @list_udf("array<bigint>", nondeterministic=True)
+    def _buckets(rows: Ragged):
+        sig = _signature_matrix(rows, num_hashes)[:, :bands * r]
+        sig = sig.reshape(-1, bands, r)
+        out = spark_xxhash64_longs_np(sig[:, :, j] for j in range(r))
+        out[rows.lengths == 0] = 42  # xxhash64 over all-null = seed
+        return out
+
     return _buckets
 
 
@@ -525,108 +442,71 @@ def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.8,
 
 # -- exact-substring duplication (winnowed anchors) ------------------------
 
-_WINNOW_UDFS: dict[tuple[int, int], object] = {}
+def _run_heads(doc: np.ndarray, val: np.ndarray) -> np.ndarray:
+    """True where (doc, val) differs from the previous element."""
+    head = np.ones(len(val), dtype=bool)
+    head[1:] = (doc[1:] != doc[:-1]) | (val[1:] != val[:-1])
+    return head
 
 
+@functools.cache
 def winnow_anchor_udf(min_tokens: int = 10, window: int = 4):
-    """Arrow pandas UDF: token-hash array → distinct winnow anchors.
+    """Arrow UDF: token-hash array → distinct winnow anchors.
 
     The fused form of ``winnow_anchors_expr`` (guide §1.2 step 2 /
     §4.2): positional gram hashes are the Spark-parity chained XXH64
     over ``min_tokens`` consecutive token hashes (the exact values
-    ``xxhash64(t, lead(t,1), …)`` computes — same vectorized kernel as
-    ``minhash_band_bucket_udf``, parity pinned in test_xxhash /
-    test_dedup), the winnow minimum is a shifted ``np.minimum`` ladder
-    over the batch-flattened gram vector with INT64_MAX sentinels at
-    doc tails (each doc's ≥ min_tokens−1 ≥ window−1 invalid tail
-    positions stop any window from reading the next doc's grams), and
-    per-doc anchors deduplicate with ``np.unique``. Replaces one 40×
+    ``xxhash64(t, lead(t,1), …)`` computes, via
+    ``spark_xxhash64_longs_np``), the winnow minimum is a shifted
+    ``np.minimum`` ladder over the batch-flattened gram vector with
+    INT64_MAX sentinels at invalid positions, and each doc's anchors
+    deduplicate in one batch-wide sort. A full window never leaves its
+    doc; a doc with 1..window−1 grams takes the segment min of its own
+    grams (its pos-0 window would run into the next doc whenever the
+    doc has fewer than ``window`` tokens). Replaces one 40×
     token-exploded sort + three window passes + a dropDuplicates
     exchange with a map-only kernel.
     """
-    key = (min_tokens, window)
-    if key in _WINNOW_UDFS:
-        return _WINNOW_UDFS[key]
-
-    import numpy as np
-
     L, W = min_tokens, window
-    _MAX = np.int64(np.iinfo(np.int64).max)
+    _MAX = np.iinfo(np.int64).max
 
-    _P1 = np.uint64(11400714785074694791)
-    _P2 = np.uint64(14029467366897019727)
-    _P3 = np.uint64(1609587929392839161)
-    _P4 = np.uint64(9650029242287828579)
-    _P5 = np.uint64(2870177450012600261)
-
-    def _rotl(x, r):
-        r = np.uint64(r)
-        return (x << r) | (x >> (np.uint64(64) - r))
-
-    def _xxh64_long(k_u64, seed_u64):
-        h = seed_u64 + _P5 + np.uint64(8)
-        h = h ^ (_rotl(k_u64 * _P2, 31) * _P1)
-        h = _rotl(h, 27) * _P1 + _P4
-        h ^= h >> np.uint64(33)
-        h *= _P2
-        h ^= h >> np.uint64(29)
-        h *= _P3
-        h ^= h >> np.uint64(32)
-        return h
-
-    @pandas_udf("array<bigint>")
-    def _anchors(th: pd.Series) -> pd.Series:
-        n = len(th)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        lens = np.fromiter((0 if x is None else len(x) for x in th),
-                           dtype=np.int64, count=n)
-        result: list = [[]] * n
-        nz = lens > 0
-        if not nz.any():
-            return pd.Series(result)
-        flat = np.concatenate(
-            [np.asarray(x, dtype=np.int64) for x in th if x is not None and len(x)]
-        )
-        N = len(flat)
-        nzlens = lens[nz]
-        starts = np.zeros(len(nzlens), dtype=np.int64)
-        np.cumsum(nzlens[:-1], out=starts[1:])
-        # positional gram hashes: chained XXH64 over L consecutive
-        # token hashes, one vector pass per chain step (doc tails
-        # produce garbage values that the validity mask below discards)
-        with np.errstate(over="ignore"):
-            pad = np.concatenate(
-                [flat.astype(np.uint64), np.zeros(L - 1, dtype=np.uint64)])
-            h = np.full(N, 42, dtype=np.uint64)
-            for j in range(L):
-                h = _xxh64_long(pad[j:j + N], h)
-        g = h.astype(np.int64)
-        # gram validity: token position p of doc d is a gram iff
-        # p <= len_d - L; invalid positions become +inf sentinels
-        pos = np.arange(N, dtype=np.int64) - np.repeat(starts, nzlens)
-        doc_len = np.repeat(nzlens, nzlens)
-        ga = np.where(pos <= doc_len - L, g, _MAX)
+    # same optimizer fence as minhash_band_bucket_udf (guide §4.4)
+    @list_udf("array<bigint>", nondeterministic=True)
+    def _anchors(th: Ragged):
+        lens, N = th.lengths, len(th.values)
+        pad = np.concatenate([th.values, np.zeros(L - 1, dtype=np.int64)])
+        g = spark_xxhash64_longs_np(pad[j:j + N] for j in range(L))
+        # token position p of doc d is a gram iff p <= len_d - L; invalid
+        # positions (doc tails, whose hashes span the next doc) become
+        # +inf sentinels
+        doc = np.repeat(np.arange(len(lens)), lens)
+        pos = np.arange(N) - th.starts[doc]
+        gc = np.maximum(lens - L + 1, 0)  # grams per doc
+        ga = np.where(pos < gc[doc], g, _MAX)
         # winnow minimum of each W consecutive gram positions
         wpad = np.concatenate([ga, np.full(W - 1, _MAX, dtype=np.int64)])
         m = ga
         for j in range(1, W):
             m = np.minimum(m, wpad[j:j + N])
-        # anchor positions: full windows, plus the pos-0 window of docs
-        # with 1..W-1 grams (it spans all their grams)
-        gc = np.maximum(doc_len - L + 1, 0)
-        sel = (pos <= gc - W) | ((gc > 0) & (gc < W) & (pos == 0))
-        ends = starts + nzlens
-        for j, i in enumerate(np.flatnonzero(nz)):
-            s, e = starts[j], ends[j]
-            picked = m[s:e][sel[s:e]]
-            if len(picked):
-                result[i] = np.unique(picked)
-        return pd.Series(result)
+        full = pos <= gc[doc] - W
+        few = (gc > 0) & (gc < W)
+        # a window min repeats over the consecutive windows sharing it:
+        # drop those runs first, so the per-doc sort below sees ~2/(W+1)
+        # of the gram positions
+        d, v = doc[full], m[full]
+        head = _run_heads(d, v)
+        a_doc = np.concatenate([d[head], np.flatnonzero(few)])
+        a_val = np.concatenate(
+            [v[head], segment_reduce(np.minimum, ga, lens, _MAX)[few]])
+        # per-doc distinct anchors, ascending: sort by value, then stably
+        # by doc (a radix sort while doc ids fit 16 bits)
+        order = np.argsort(a_val)
+        order = order[np.argsort(
+            a_doc[order].astype(np.min_scalar_type(len(lens))), kind="stable")]
+        a_doc, a_val = a_doc[order], a_val[order]
+        head = _run_heads(a_doc, a_val)
+        return a_val[head], np.bincount(a_doc[head], minlength=len(lens))
 
-    # same optimizer fence as minhash_band_bucket_udf (guide §4.4)
-    _anchors = _anchors.asNondeterministic()
-    _WINNOW_UDFS[key] = _anchors
     return _anchors
 
 
@@ -750,50 +630,32 @@ def substring_dup_pairs(df: DataFrame, id_col: str = "doc_id",
 
 # -- SimHash ----------------------------------------------------------------
 
-_SIMHASH_UDF = None
+def _hash_bit_votes(rows: Ragged) -> np.ndarray:
+    """(rows × 64) per-row sums of ±1 over each bit of the row's int64
+    hashes (column j = bit j, +1 where set): the un-thresholded simhash
+    that ``simhash`` signs and ``embed.embed_text`` keeps as its vector.
+    Null and empty rows sum to 0."""
+    bits = np.unpackbits(rows.values.astype("<i8", copy=False).view(np.uint8)
+                         .reshape(-1, 8), axis=1, bitorder="little")
+    ones = segment_reduce(np.add, bits, rows.lengths, 0, dtype=np.int64)
+    return 2 * ones - rows.lengths[:, None]
 
 
+@functools.cache
 def _get_simhash_udf():
-    """Lazily build the simhash pandas UDF (needs an active session).
+    """Simhash Arrow UDF over an array of 64-bit *token hashes*
+    (computed JVM-side with xxhash64 — string work never crosses into
+    Python): bit j is set iff more of the row's tokens set it than not
+    (``_hash_bit_votes``); null/empty rows → 0. No per-row or per-token
+    Python loop."""
 
-    Input is the array of 64-bit *token hashes* (computed JVM-side with
-    xxhash64 — string work never crosses into Python). The UDF flattens
-    the batch, unpacks hash bits to ±1, and segment-sums with
-    `np.add.reduceat` — no per-row or per-token Python loop.
-    """
-    global _SIMHASH_UDF
-    if _SIMHASH_UDF is not None:
-        return _SIMHASH_UDF
+    @list_udf("long")
+    def _simhash64(th: Ragged):
+        set_bits = _hash_bit_votes(th) > 0
+        return np.packbits(set_bits, axis=1, bitorder="little").view("<i8") \
+            .ravel().astype(np.int64)
 
-    @pandas_udf("long")
-    def _simhash64(hashes: pd.Series) -> pd.Series:
-        import numpy as np
-
-        n = len(hashes)
-        out = np.zeros(n, dtype=np.int64)
-        if n == 0:
-            return pd.Series(out)
-        lens = np.fromiter(
-            (0 if x is None else len(x) for x in hashes), dtype=np.int64, count=n
-        )
-        nz = lens > 0
-        if not nz.any():
-            return pd.Series(out)
-        flat = np.concatenate(
-            [np.asarray(x, dtype=np.int64) for x in hashes if x is not None and len(x)]
-        )
-        # bit matrix (total_tokens × 64) of ±1 contributions
-        bits = np.unpackbits(
-            flat.astype(">i8").view(np.uint8).reshape(-1, 8), axis=1
-        ).astype(np.int32) * 2 - 1
-        offsets = np.zeros(int(nz.sum()), dtype=np.int64)
-        np.cumsum(lens[nz][:-1], out=offsets[1:])
-        acc = np.add.reduceat(bits, offsets, axis=0)
-        out[nz] = np.packbits(acc > 0, axis=1).copy().view(">i8").ravel()
-        return pd.Series(out)
-
-    _SIMHASH_UDF = _simhash64
-    return _SIMHASH_UDF
+    return _simhash64
 
 
 def simhash(df: DataFrame, text_col: str = "text", out_col: str = "simhash") -> DataFrame:
@@ -901,8 +763,6 @@ def exact_cosine_pairs(df: DataFrame, id_col: str = "vec_id",
     B only sizes tiles, so an estimate within ~2× is fine) or persist
     the input around the call.
     """
-    import numpy as np
-
     from logstash_integration_jdbc_spark.operators.similarity import (
         dot_expr,
         norm_expr,
@@ -1393,8 +1253,6 @@ def semantic_dedup(df: DataFrame, id_col: str = "vec_id",
 
     Returns the surviving rows of ``df`` plus their ``centroid_id``.
     """
-    import numpy as np
-
     from .similarity import _assign_expr, _collect_centroids, _lloyd_refine
 
     vecs = df.select(id_col, vec_col)
@@ -1403,7 +1261,7 @@ def semantic_dedup(df: DataFrame, id_col: str = "vec_id",
         cents = _lloyd_refine(vecs, cents, id_col, vec_col, kmeans_iters)
     assigned = vecs.withColumn("centroid_id", _assign_expr(vec_col, cents))
 
-    def _dropped(pdf: pd.DataFrame) -> pd.DataFrame:
+    def _dropped(pdf):
         if len(pdf) > max_cluster_rows:
             raise ValueError(
                 f"semantic_dedup cluster of {len(pdf)} rows exceeds "

@@ -14,10 +14,14 @@ fixed hash coefficients.
 
 from __future__ import annotations
 
+import functools
+
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+
+from ..functions.arrow_kernels import Ragged, list_udf
 
 
 def dot_expr(a: Column, b: Column) -> Column:
@@ -113,28 +117,22 @@ def hyperplane_sketch(vec: Column, bits: int = 16) -> Column:
     return out
 
 
-_SKETCH_UDFS: dict[int, object] = {}
-
-
+@functools.cache
 def hyperplane_sketch_udf(bits: int = 64):
-    """Arrow pandas UDF computing the SAME sign sketch as
-    ``hyperplane_sketch`` for any width up to 64, via one numpy matmul.
+    """Arrow UDF computing the SAME sign sketch as ``hyperplane_sketch``
+    for any width up to 64, via one numpy matmul.
 
-    The batch's vectors stack into an (n × d) matrix multiplied against
+    The batch's vectors form an (n × d) matrix multiplied against
     the deterministic (d × bits) plane matrix (same ``_plane_coeff``
     coefficients as the expression form) — BLAS does the work, no
     per-row Python. This is the production path: the expression form
     builds ``bits`` interpreted zip_with/aggregate trees, fine for 16
-    bits, pathological for 64.
+    bits, pathological for 64. Every vector in a batch must have the
+    same dimension (``Ragged.matrix`` raises otherwise).
     """
-    if bits in _SKETCH_UDFS:
-        return _SKETCH_UDFS[bits]
+    planes: dict[int, np.ndarray] = {}
 
-    import numpy as np
-
-    planes: dict[int, "np.ndarray"] = {}
-
-    def plane_matrix(dim: int) -> "np.ndarray":
+    def plane_matrix(dim: int) -> np.ndarray:
         if dim not in planes:
             planes[dim] = np.array(
                 [[_plane_coeff(i, j) for i in range(bits)] for j in range(dim)],
@@ -142,20 +140,14 @@ def hyperplane_sketch_udf(bits: int = 64):
             )
         return planes[dim]
 
-    @pandas_udf("long")
-    def _sketch(vs: pd.Series) -> pd.Series:
-        n = len(vs)
-        if n == 0:
-            return pd.Series([], dtype="int64")
-        mat = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
-        dots = mat @ plane_matrix(mat.shape[1])
-        sign_bits = (dots > 0).astype(np.uint64)
-        out = np.zeros(n, dtype=np.uint64)
-        for i in range(bits):
-            out |= sign_bits[:, i] << np.uint64(i)
-        return pd.Series(out.view(np.int64))
+    @list_udf("long")
+    def _sketch(vs: Ragged):
+        mat = vs.matrix().astype(np.float64, copy=False)
+        sign_bits = (mat @ plane_matrix(mat.shape[1]) > 0).astype(np.uint64)
+        # distinct powers of two: the sum is the bitwise OR
+        return (sign_bits << np.arange(bits, dtype=np.uint64)).sum(
+            axis=1, dtype=np.uint64).view(np.int64)
 
-    _SKETCH_UDFS[bits] = _sketch
     return _sketch
 
 
@@ -641,15 +633,13 @@ def pq_encode_udf(
     out_col: str = "pq_codes",
 ) -> DataFrame:
     """Arrow-batched PQ encode for production-size codebooks: the
-    batch's vectors stack into an (n × m × dsub) tensor scored against
+    batch's vectors reshape into an (n × m × dsub) tensor scored against
     the (m × K × dsub) codebook tensor with ONE einsum — no per-row
     Python, and expression-tree size is independent of K (the
     expression form compiles O(m·K) literal structs, which stalls
     codegen past ~32 codes). Same argmin semantics as ``pq_encode``:
     L2 via the v·w − ‖w‖²/2 identity, ties to the smallest code id
     (np.argmax returns the first maximum)."""
-    import numpy as np
-
     n_subspaces = len(books)
     dsub = len(books[0][0][1])
     W = np.array(
@@ -657,15 +647,12 @@ def pq_encode_udf(
         dtype=np.float64)                      # (m, K, dsub)
     half_n2 = 0.5 * np.einsum("mkd,mkd->mk", W, W)   # (m, K)
 
-    @pandas_udf("array<int>")
-    def _enc(vs: pd.Series) -> pd.Series:
-        if len(vs) == 0:
-            return pd.Series([], dtype="object")
-        mat = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
-        sub = mat.reshape(len(vs), n_subspaces, dsub)
+    @list_udf("array<int>")
+    def _enc(vs: Ragged):
+        sub = vs.matrix().astype(np.float64, copy=False).reshape(
+            len(vs.lengths), n_subspaces, dsub)
         scores = np.einsum("nmd,mkd->nmk", sub, W) - half_n2[None, :, :]
-        codes = np.argmax(scores, axis=2).astype(np.int32)
-        return pd.Series(list(codes))
+        return np.argmax(scores, axis=2).astype(np.int32)
 
     return corpus.withColumn(out_col, _enc(F.col(vec_col)))
 
@@ -785,8 +772,6 @@ def _adc_score_lut(encoded: DataFrame, queries: DataFrame,
     an Arrow ``mapInPandas`` kernel scores every (candidate, query) pair
     in a batch with numpy gathers. Emits (query_id, corpus_id, cosine)
     long-form, self-matches excluded."""
-    import numpy as np
-
     n_subspaces = len(books)
     dsub = len(books[0][0][1])
     W = np.array(

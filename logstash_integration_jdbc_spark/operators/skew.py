@@ -9,8 +9,8 @@ mitigations, used together:
 - explicit salting for writes/repartitions where AQE doesn't apply:
   partition by ``(extra_cols..., pmod(xxhash64(key, salt_bits), n))`` so
   one hot key spreads over ``n_salts`` tasks. The salt derives from
-  xxhash64 of the key plus a per-row component, deterministic and
-  RNG-free.
+  xxhash64 of the key plus per-row columns, deterministic and RNG-free
+  (a retried batch rewrites the same partitions).
 """
 
 from __future__ import annotations
@@ -37,6 +37,11 @@ def salted_repartition(
 ) -> DataFrame:
     """Repartition on (extra_cols, key, salt) — hot keys spread n_salts-wide.
 
+    The salt hashes the key with ``turn_idx``/``ts`` when the frame has
+    them, else with every other hashable column, so rows of one hot key
+    spread over up to n_salts salts (only rows identical outside the
+    key share one).
+
     ``with_key=False`` drops the raw key COLUMN from the partitioning
     expression (the salt still derives from it, so a hot key still
     spreads n_salts-wide): partitioning degenerates to the
@@ -48,7 +53,11 @@ def salted_repartition(
     pipeline sink). Keep ``with_key=True`` when downstream needs rows of
     one key clustered or a uniform row-level spread.
     """
-    row_cols = [c for c in ("turn_idx", "ts") if c in df.columns]
+    unhashable = ("map<", "variant")  # types xxhash64 rejects
+    row_cols = [c for c in ("turn_idx", "ts") if c in df.columns] or [
+        "`" + f.name.replace("`", "``") + "`" for f in df.schema.fields
+        if f.name != key
+        and not any(u in f.dataType.simpleString() for u in unhashable)]
     salt = salt_expr(key, n_salts, row_cols).alias("__salt")
     cols = [F.col(c) for c in extra_cols] + ([F.col(key)] if with_key else []) + [salt]
     if num_partitions is None and not with_key:

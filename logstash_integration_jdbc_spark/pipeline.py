@@ -58,11 +58,17 @@ def with_retries(fn, attempts: int = 1, wait_s: float = 0.5, logger=None):
     retry loop :234-246). The caller's watermark only advances after
     success, so an exhausted retry leaves the batch fully re-runnable —
     and the deterministic run_id makes the retried write idempotent
-    (dynamic overwrite of the same partitions)."""
+    (dynamic overwrite of the same partitions). An ``AnalysisException``
+    (bad column, type or table) fails the same way every time, so it
+    re-raises at once."""
+    from pyspark.errors import AnalysisException
+
     tries = attempts + 1
     for i in range(tries):
         try:
             return fn()
+        except AnalysisException:
+            raise
         except Exception:
             if i == tries - 1:
                 raise
@@ -197,9 +203,7 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict[str, Any]:
     # (A light-shuffle variant — exchange raw columns + routing key only,
     # re-derive parse/enrich post-exchange — was measured ~15% SLOWER
     # end-to-end here: the extra regex pass + broadcast probes cost more
-    # than the ~25% smaller exchange payload saves on one box. Router's
-    # pre_partitioned flag keeps that shape available for deployments
-    # where network shuffle dominates.)
+    # than the ~25% smaller exchange payload saves on one box.)
     # ALL per-stage lineage counters ride the write action as ONE
     # CollectMetrics node. One node, not one per stage: each observe()
     # splits whole-stage codegen, and three of them measured +90% wall on

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -16,6 +17,22 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def testdata():
+    """``testdata("sf0.001/documents.parquet")`` → that path under the
+    shared scale-factor data root ($SPARK_GRAFT_TESTDATA, defaulting to
+    the location TESTDATA.md describes); the test skips when it is
+    absent."""
+    root = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
+
+    def path(rel: str) -> str:
+        p = os.path.join(root, rel)
+        if not os.path.exists(p):
+            pytest.skip(f"test data {p} not present")
+        return p
+    return path
 
 
 @pytest.fixture(scope="session")

@@ -108,14 +108,14 @@ def test_nb_min_count_floor(spark):
         assert abs(v - a[t]) < 1e-15
 
 
-def test_nb_plan_shapes(spark):
+def test_nb_plan_shapes(spark, testdata):
     from logstash_integration_jdbc_spark.operators.classify import (
         train_and_score,
     )
 
     from tests.test_plans import plan_of
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = spark.read.parquet(testdata("sf0.001/documents.parquet"))
     labeled = docs.withColumn("label", F.col("lang") == "en")
     p = plan_of(train_and_score(labeled, "label"))
     assert "EvalPython" not in p

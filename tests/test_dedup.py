@@ -95,8 +95,8 @@ def test_embedding_near_dups(spark):
     assert (0, 2) not in pairs and (1, 2) not in pairs
 
 
-def test_dedup_on_real_documents(spark):
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+def test_dedup_on_real_documents(spark, testdata):
+    docs = spark.read.parquet(testdata("sf0.001/documents.parquet"))
     # duplicate the table with shifted ids → every doc has one exact dup
     shifted = docs.withColumn("doc_id", F.col("doc_id") + 1_000_000)
     both = docs.unionByName(shifted)
@@ -105,7 +105,7 @@ def test_dedup_on_real_documents(spark):
     assert kept.agg(F.max("doc_id")).first()[0] < 1_000_000  # min-id wins
 
 
-def test_signature_udf_matches_expression_form(spark):
+def test_signature_udf_matches_expression_form(spark, testdata):
     """The Arrow-UDF signature must equal the pure-expression reference."""
     from logstash_integration_jdbc_spark.operators.dedup import (
         minhash_signature,
@@ -113,7 +113,7 @@ def test_signature_udf_matches_expression_form(spark):
         shingle_hashes,
     )
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(50)
+    docs = spark.read.parquet(testdata("sf0.001/documents.parquet")).limit(50)
     base = docs.select("doc_id", shingle_hashes(F.col("text")).alias("sh"))
     both = base.select(
         "doc_id",
@@ -149,7 +149,7 @@ def test_signature_udf_null_and_empty_rows(spark):
         assert expr == udf, r.id
 
 
-def test_embedding_near_dup_recall_on_true_near_pairs(spark):
+def test_embedding_near_dup_recall_on_true_near_pairs(spark, testdata):
     """Recall bound on genuinely-near (NOT identical) pairs: perturb the
     real embeddings (even dims ×1.35, odd ×0.65 → cosine ≈ 0.94-0.96) and
     compare against the exact numpy O(n²) answer. Round-1's full-sketch-
@@ -159,7 +159,7 @@ def test_embedding_near_dup_recall_on_true_near_pairs(spark):
 
     from logstash_integration_jdbc_spark.operators.dedup import embedding_near_dups
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").withColumn(
+    emb = spark.read.parquet(testdata("sf0.001/embeddings.parquet")).withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     ).select("vec_id", "embedding")
     pert = emb.select(
@@ -190,14 +190,14 @@ def test_embedding_near_dup_recall_on_true_near_pairs(spark):
     assert recall >= 0.95, f"recall {recall:.3f} on {len(want)} true pairs"
 
 
-def test_exact_cosine_pairs_equals_numpy(spark):
+def test_exact_cosine_pairs_equals_numpy(spark, testdata):
     """Block-GEMM exact pairs must equal the numpy O(n²) answer exactly
     (not just recall-bounded like the LSH-probe variant)."""
     import numpy as np
 
     from logstash_integration_jdbc_spark.operators.dedup import exact_cosine_pairs
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").withColumn(
+    emb = spark.read.parquet(testdata("sf0.001/embeddings.parquet")).withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     ).select("vec_id", "embedding")
     pert = emb.select(
@@ -242,12 +242,12 @@ def test_tile_count_bounds_tile_memory():
     assert _tile_count(5, 8192, min_parallelism=32) == 5
 
 
-def test_exact_cosine_pairs_small_tiles_identical(spark):
+def test_exact_cosine_pairs_small_tiles_identical(spark, testdata):
     """Forcing many tiny tiles (tile-pair replication path under real
     multi-block traffic) must not change the exact answer."""
     from logstash_integration_jdbc_spark.operators.dedup import exact_cosine_pairs
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").withColumn(
+    emb = spark.read.parquet(testdata("sf0.001/embeddings.parquet")).withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     ).select("vec_id", "embedding")
     pert = emb.select(
@@ -283,7 +283,7 @@ def test_exact_dedup_normalized_collapses_reformatted_copies(spark):
     assert norm == {1, 4, 5}          # 1≡2≡3 under normalization, min id wins
 
 
-def test_gram_hashes_preserve_shingle_set_relations(spark):
+def test_gram_hashes_preserve_shingle_set_relations(spark, testdata):
     """The staged token/gram hash form must induce the same shingle-SET
     structure as the reference shingle_hashes: equal set sizes per doc
     and equal pairwise intersection sizes (what jaccard consumes)."""
@@ -295,7 +295,7 @@ def test_gram_hashes_preserve_shingle_set_relations(spark):
         token_hashes,
     )
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(30)
+    docs = spark.read.parquet(testdata("sf0.001/documents.parquet")).limit(30)
     ref = {r.doc_id: set(r.s) for r in docs.select(
         "doc_id", shingle_hashes(F.col("text")).alias("s")).collect()}
     fast = {r.doc_id: set(r.s) for r in docs.select(
@@ -353,12 +353,12 @@ def test_contamination_pairs(spark):
     assert (10, 10) not in got  # self-pair excluded
 
 
-def test_contamination_benchmark_broadcast_plan(spark):
+def test_contamination_benchmark_broadcast_plan(spark, testdata):
     from logstash_integration_jdbc_spark.operators.dedup import (
         contamination_pairs,
     )
 
-    corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    corpus = spark.read.parquet(testdata("sf0.001/documents.parquet"))
     bench = corpus.filter(F.col("doc_id") % 50 == 0)
     plan = contamination_pairs(corpus, bench)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
@@ -539,7 +539,7 @@ def test_dedup_against_index_finds_cross_dups(spark):
     assert [r.doc_id for r in kept.collect()] == [101]
 
 
-def test_dedup_against_index_matches_full_lsh(spark):
+def test_dedup_against_index_matches_full_lsh(spark, testdata):
     # probing batch-vs-index must find exactly the cross pairs the
     # monolithic LSH over the union finds (same banding)
     from logstash_integration_jdbc_spark.operators.dedup import (
@@ -549,7 +549,7 @@ def test_dedup_against_index_matches_full_lsh(spark):
     )
 
     docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet").select("doc_id", "text")
+        testdata("sf0.001/documents.parquet")).select("doc_id", "text")
     batch = docs.where(F.col("doc_id") % 5 == 0)
     hist = docs.where(F.col("doc_id") % 5 != 0)
     got = {(r.new_id, r.index_id)
@@ -777,7 +777,7 @@ def test_band_bucket_udf_evaluated_once(docs, spark):
     assert plan.count("ArrowEvalPython") == 1
 
 
-def test_winnow_kernel_matches_window_reference(spark):
+def test_winnow_kernel_matches_window_reference(spark, testdata):
     # r6: winnow_anchors moved to a fused Arrow kernel; it must produce
     # exactly the window/sort reference's (id, anchor) set — including
     # short docs (no grams), few-gram docs (single min), dup anchors.
@@ -786,7 +786,7 @@ def test_winnow_kernel_matches_window_reference(spark):
         winnow_anchors_expr,
     )
 
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    docs = spark.read.parquet(testdata("sf0.01/documents.parquet"))
     texts = [(200001, "short doc"), (200002, " ".join(["tok"] * 10)),
              (200003, " ".join(f"w{i}" for i in range(11))),
              (200004, " ".join(f"w{i % 3}" for i in range(40))),
@@ -797,3 +797,28 @@ def test_winnow_kernel_matches_window_reference(spark):
     want = {(r["doc_id"], r["__anchor"])
             for r in winnow_anchors_expr(both).collect()}
     assert got == want and len(got) > 0
+
+
+def test_winnow_kernel_short_docs_when_window_exceeds_min_tokens(spark):
+    # min_tokens < window: a doc with fewer than `window` grams has
+    # fewer than window-1 sentinel tail slots, so its pos-0 window used
+    # to read the next doc's grams in the batch. Its anchor must be the
+    # min of its own grams, as in the window/sort reference.
+    import random
+
+    from logstash_integration_jdbc_spark.operators.dedup import (
+        winnow_anchors,
+        winnow_anchors_expr,
+    )
+
+    rng = random.Random(5)
+    docs = spark.createDataFrame(
+        [(i, " ".join(f"w{rng.randrange(50)}"
+                      for _ in range(rng.choice((2, 3, 12)))))
+         for i in range(200)],
+        "doc_id long, text string").repartition(1)
+    got = {(r["doc_id"], r["__anchor"])
+           for r in winnow_anchors(docs, min_tokens=2, window=4).collect()}
+    want = {(r["doc_id"], r["__anchor"])
+            for r in winnow_anchors_expr(docs, min_tokens=2, window=4).collect()}
+    assert got == want and len(want) > 200

@@ -202,6 +202,21 @@ class TestRetry:
             with_retries(flaky, attempts=1, wait_s=0.01)  # 2 tries < 3 needed
         assert calls["n"] == 2
 
+    def test_with_retries_does_not_retry_analysis_errors(self):
+        from pyspark.errors import AnalysisException
+
+        from logstash_integration_jdbc_spark.pipeline import with_retries
+
+        calls = {"n": 0}
+
+        def bad_column():
+            calls["n"] += 1
+            raise AnalysisException("[UNRESOLVED_COLUMN] no such column")
+
+        with pytest.raises(AnalysisException):
+            with_retries(bad_column, attempts=3, wait_s=0.01)
+        assert calls["n"] == 1
+
     def test_pipeline_retries_transient_write_failure(
         self, spark, fixture_dir, tmp_path, monkeypatch
     ):

@@ -49,12 +49,12 @@ def test_profile_skips_non_atomic(spark):
     assert "arr" not in cols
 
 
-def test_profile_single_pass_plan(spark):
+def test_profile_single_pass_plan(spark, testdata):
     from tests.test_plans import plan_of
 
     from logstash_integration_jdbc_spark.operators.profile import profile
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = spark.read.parquet(testdata("sf0.001/documents.parquet"))
     p = plan_of(profile(docs))
     # approx-distinct default: ONE scan, no Expand, no Python
     assert p.count("Scan parquet") == 1

@@ -211,3 +211,19 @@ def test_salted_repartition_with_key_false_spreads_and_bounds_files(
              .agg(F.count(F.lit(1)).alias("n")).collect()]
     assert len([s for s in sizes if s > 0]) >= 4
     assert max(sizes) < 4000 * 0.5
+
+
+def test_salted_repartition_spreads_hot_key_without_row_columns(spark):
+    # neither turn_idx nor ts: the salt falls back to the row's other
+    # hashable columns (not map/variant) instead of a constant per key
+    hot = spark.range(0, 4000).select(
+        F.lit("hot").alias("conv_id"), F.col("id").alias("payload"),
+        F.create_map(F.lit("k"), F.col("id")).alias("attrs"),
+        F.parse_json(F.lit('{"a": 1}')).alias("doc"))
+    out = salted_repartition(hot, "conv_id", n_salts=8, with_key=False)
+    parts = out.select(F.spark_partition_id().alias("p")).distinct().count()
+    assert parts > 1
+    again = salted_repartition(hot, "conv_id", n_salts=8, with_key=False)
+    placed = out.select("payload", F.spark_partition_id().alias("p"))
+    assert placed.exceptAll(
+        again.select("payload", F.spark_partition_id().alias("p"))).count() == 0

@@ -56,8 +56,8 @@ def test_max_watermark_and_cursors_consistent(spark, transcripts):
         assert c["conv_id"] and c["turn_idx"] >= 0
 
 
-def test_load_testdata_registers_views(spark):
-    out = load_testdata(spark, "/root/testdata/sf0.001", "region", "nation")
+def test_load_testdata_registers_views(spark, testdata):
+    out = load_testdata(spark, testdata("sf0.001"), "region", "nation")
     assert set(out) == {"region", "nation"}
     assert spark.sql("SELECT count(*) n FROM region").first().n == 5
 

@@ -13,8 +13,8 @@ from logstash_integration_jdbc_spark.operators.similarity import (
 
 
 @pytest.fixture(scope="module")
-def emb(spark):
-    return spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").cache()
+def emb(spark, testdata):
+    return spark.read.parquet(testdata("sf0.001/embeddings.parquet")).cache()
 
 
 @pytest.fixture(scope="module")
@@ -79,7 +79,7 @@ def test_topk_rank_is_dense_and_ordered(emb, queries):
         assert rs[0].cosine >= rs[1].cosine >= rs[2].cosine
 
 
-def test_sketch_udf_matches_expression_form(spark):
+def test_sketch_udf_matches_expression_form(spark, testdata):
     """The numpy-matmul sketch UDF must equal the expression-form sketch
     bit-for-bit (same deterministic hyperplanes) at 16 bits."""
     from pyspark.sql import functions as F
@@ -89,7 +89,7 @@ def test_sketch_udf_matches_expression_form(spark):
         hyperplane_sketch_udf,
     )
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").withColumn(
+    emb = spark.read.parquet(testdata("sf0.001/embeddings.parquet")).withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     ).limit(64)
     rows = emb.select(
@@ -281,10 +281,10 @@ class TestProductQuantization:
     """PQ/ADC: the ANN memory path — 64-dim float64 → 8 one-byte codes."""
 
     @pytest.fixture(scope="class")
-    def emb_d(self, spark):
+    def emb_d(self, spark, testdata):
         from pyspark.sql import functions as F
 
-        return (spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+        return (spark.read.parquet(testdata("sf0.001/embeddings.parquet"))
                 .withColumn("embedding", F.col("embedding").cast("array<double>"))
                 .cache())
 
@@ -435,10 +435,10 @@ class TestIvfPq:
     """IVF-PQ composition: probe pruning × residual PQ × ADC × rerank."""
 
     @pytest.fixture(scope="class")
-    def emb_d(self, spark):
+    def emb_d(self, spark, testdata):
         from pyspark.sql import functions as F
 
-        return (spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+        return (spark.read.parquet(testdata("sf0.001/embeddings.parquet"))
                 .withColumn("embedding", F.col("embedding").cast("array<double>"))
                 .cache())
 

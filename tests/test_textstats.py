@@ -51,8 +51,8 @@ def test_lang_id_on_synthetic(spark):
     assert got == {1: "en", 2: "de", 3: "fr", 4: "es", 5: "zh", 6: "unknown"}
 
 
-def test_lang_id_accuracy_on_documents(spark):
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+def test_lang_id_accuracy_on_documents(spark, testdata):
+    docs = spark.read.parquet(testdata("sf0.01/documents.parquet"))
     scored = lang_id(docs).withColumn("hit", (F.col("lang_pred") == F.col("lang")).cast("int"))
     acc_en = scored.filter(F.col("lang") == "en").agg(F.avg("hit")).first()[0]
     # synthetic docs are word-salad; only require the heuristic to be
@@ -155,10 +155,10 @@ def test_split_by_hash_determinism_and_leakage(spark):
         split_by_hash(df, F.col("conv"), {})
 
 
-def test_pack_sequences_budget_and_determinism(spark):
+def test_pack_sequences_budget_and_determinism(spark, testdata):
     from logstash_integration_jdbc_spark.operators.sampling import pack_sequences
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = spark.read.parquet(testdata("sf0.001/documents.parquet"))
     out = pack_sequences(docs, budget=150, n_buckets=8)
     rows = out.collect()
     assert len(rows) == docs.count()
@@ -182,13 +182,13 @@ def test_pack_sequences_budget_and_determinism(spark):
         assert seqs == set(range(len(seqs)))
 
 
-def test_curate_documents_end_to_end(spark):
+def test_curate_documents_end_to_end(spark, testdata):
     from logstash_integration_jdbc_spark.operators.curate import (
         curate_documents,
         curation_funnel,
     )
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = spark.read.parquet(testdata("sf0.001/documents.parquet"))
     out = curate_documents(docs)
     rows = out.collect()
     assert rows, "curation should keep some documents"
@@ -301,12 +301,12 @@ def test_gopher_rules_each_rule_fires(spark):
     assert rows[5].g_bullet_ok is False and rows[5].g_words_ok
 
 
-def test_gopher_rules_map_only_plan(spark):
+def test_gopher_rules_map_only_plan(spark, testdata):
     from logstash_integration_jdbc_spark.operators.textstats import (
         gopher_rules,
     )
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = spark.read.parquet(testdata("sf0.001/documents.parquet"))
     plan = gopher_rules(docs)._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan and "Exchange" not in plan
 

@@ -50,3 +50,32 @@ def test_xxh64_long_chain_matches_spark(spark):
         assert spark_xxhash64_longs([a]) == r.h1
         assert spark_xxhash64_longs([a, b]) == r.h2
         assert spark_xxhash64_longs([a, b, c]) == r.h3
+
+
+def test_vectorized_xxh64_chain_matches_scalar():
+    """The numpy XXH64 the Arrow kernels use must equal the scalar
+    ``xxh64_long`` chain value for value, signed extremes included."""
+    import random
+
+    import numpy as np
+
+    from logstash_integration_jdbc_spark.functions.xxhash import (
+        spark_xxhash64_longs,
+        spark_xxhash64_longs_np,
+        xxh64_long,
+        xxh64_long_np,
+    )
+
+    rng = random.Random(11)
+    edges = [0, -1, -(2**63), 2**63 - 1, 1, 42]
+    vals = edges + [rng.randrange(-(2**63), 2**63) for _ in range(200)]
+    cols = [np.array(vals, dtype=np.int64),
+            np.array(vals[::-1], dtype=np.int64),
+            np.roll(np.array(vals, dtype=np.int64), 3)]
+    seeds = np.array([rng.randrange(2**64) for _ in vals], dtype=np.uint64)
+    assert xxh64_long_np(cols[0], seeds).tolist() == [
+        xxh64_long(v, int(s)) for v, s in zip(vals, seeds)]
+    got = spark_xxhash64_longs_np(cols)
+    assert got.dtype == np.int64
+    assert got.tolist() == [
+        spark_xxhash64_longs([int(c[i]) for c in cols]) for i in range(len(vals))]
