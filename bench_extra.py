@@ -110,7 +110,6 @@ def cmd_pipeline_stages(rows):
         build_lookups,
         build_router,
     )
-    from logstash_integration_jdbc_spark.operators.skew import salted_repartition
     from logstash_integration_jdbc_spark.sources.scan import (
         incremental_scan,
         partition_cursors,
@@ -142,15 +141,13 @@ def cmd_pipeline_stages(rows):
         "ts_hour", F.date_format(F.date_trunc("hour", F.col("ts")), "yyyy-MM-dd-HH")
     ).withColumn("run_id", F.lit("x")).withColumn("sink", router.sink_expr())
     _time(spark, "p4: +route cols", _noop(routed))
-    salted = salted_repartition(routed, key="conv_id", n_salts=8,
-                                extra_cols=["sink", "ts_hour", "run_id"],
-                                with_key=False)
-    _time(spark, "p5: +salted repartition", _noop(salted))
+    rebalanced = routed.hint("rebalance", F.col("sink"), F.col("ts_hour"), F.col("run_id"))
+    _time(spark, "p5: +rebalance", _noop(rebalanced))
 
     def write_real():
         import shutil
         out = tempfile.mkdtemp(prefix="pstage-w-")
-        salted.write.mode("overwrite").partitionBy("sink", "ts_hour", "run_id").parquet(out)
+        rebalanced.write.mode("overwrite").partitionBy("sink", "ts_hour", "run_id").parquet(out)
         shutil.rmtree(out, ignore_errors=True)
 
     _time(spark, "p6: +parquet write (partitioned)", write_real)

@@ -36,7 +36,6 @@ def main(argv: list[str] | None = None) -> int:
         run.add_argument(name, required=req)
     run.add_argument("--clean-run", action="store_true")
     run.add_argument("--no-record-last-run", action="store_true")
-    run.add_argument("--salts", type=int, default=8)
 
     st = sub.add_parser("stream", help="one availableNow streaming pass")
     for name in ("--transcripts", "--tool-dim", "--role-dim", "--out", "--checkpoint"):
@@ -68,7 +67,6 @@ def main(argv: list[str] | None = None) -> int:
             checkpoint_path=args.checkpoint,
             clean_run=args.clean_run,
             record_last_run=not args.no_record_last_run,
-            n_salts=args.salts,
         )
         metrics = run_pipeline(spark, cfg)
         print(json.dumps(metrics, default=str))

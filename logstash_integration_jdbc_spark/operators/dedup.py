@@ -263,9 +263,9 @@ def _spread(df: DataFrame, id_col: str, text_col: str,
     "for parallelism" is a pure extra exchange when the scan is already
     parallel — measured ~0.45 s of the 1M-doc minhash wall). ``force``
     keeps it unconditional for consumers whose DOWNSTREAM plan relies on
-    the id-hash partitioning itself (``winnow_anchors``: the per-id
-    window sort would otherwise exchange the token-EXPLODED rows, ~40×
-    the text bytes)."""
+    the id-hash partitioning itself (the window/sort winnow reference in
+    the tests: its per-id window sort would otherwise exchange the
+    token-EXPLODED rows, ~40× the text bytes)."""
     out = df.select(
         F.col(id_col), F.coalesce(F.col(text_col), F.lit("")).alias(text_col)
     )
@@ -453,7 +453,7 @@ def _run_heads(doc: np.ndarray, val: np.ndarray) -> np.ndarray:
 def winnow_anchor_udf(min_tokens: int = 10, window: int = 4):
     """Arrow UDF: token-hash array → distinct winnow anchors.
 
-    The fused form of ``winnow_anchors_expr`` (guide §1.2 step 2 /
+    The fused kernel form of window/sort winnowing (guide §1.2 step 2 /
     §4.2): positional gram hashes are the Spark-parity chained XXH64
     over ``min_tokens`` consecutive token hashes (the exact values
     ``xxhash64(t, lead(t,1), …)`` computes, via
@@ -517,9 +517,8 @@ def winnow_anchors(df: DataFrame, id_col: str = "doc_id",
     detection — kernel form: JVM-side token hashing feeds
     ``winnow_anchor_udf`` (chained-XXH64 gram hashes + shifted-minimum
     winnowing + per-doc dedup, all numpy), whose anchor arrays explode
-    to rows. Identical output to ``winnow_anchors_expr`` (pinned by
-    test_dedup); the window/sort formulation survives there as the
-    semantic reference.
+    to rows. Identical output to the window/sort reference formulation
+    ``winnow_anchors_expr`` in ``tests/test_dedup.py``, which pins it.
 
     Guarantee (Schleimer/Wilkerson/Aiken winnowing): two documents
     sharing an exact token run of length ≥ ``min_tokens + window - 1``
@@ -538,57 +537,6 @@ def winnow_anchors(df: DataFrame, id_col: str = "doc_id",
         F.explode(
             winnow_anchor_udf(min_tokens, window)(token_hashes(F.col(text_col)))
         ).alias("__anchor"),
-    )
-
-
-def winnow_anchors_expr(df: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text", min_tokens: int = 10,
-                        window: int = 4) -> DataFrame:
-    """Window/sort reference formulation of ``winnow_anchors``.
-
-    Plan notes (kept for the record): NO higher-order functions — an
-    array formulation (transform over sequence + array_min of slices)
-    was measured 40× slower end-to-end because projection collapse
-    inlines the gram array into the window transform, re-evaluating the
-    whole gram pipeline per window element (186 s → 6 s at 1000 docs).
-    Token hashes posexplode once per doc; gram hash =
-    ``xxhash64(t, lead(t,1), …, lead(t,L-1))``, winnow min = windowed
-    ``min`` over the next ``window`` gram rows; all three window
-    functions share one (id, pos) sort whose hash partition comes from
-    ``_spread``'s forced repartition.
-    """
-    if min_tokens < 2 or window < 1:
-        raise ValueError("min_tokens must be >= 2 and window >= 1")
-    from pyspark.sql import Window
-
-    L, W = min_tokens, window
-    src = _spread(df, id_col, text_col, force=True)
-    toks = src.select(
-        F.col(id_col),
-        F.posexplode(token_hashes(F.col(text_col))).alias("__pos", "__t"),
-    )
-    per_doc = Window.partitionBy(id_col)
-    by_pos = per_doc.orderBy("__pos")
-    leads = [F.col("__t")] + [F.lead("__t", j).over(by_pos)
-                              for j in range(1, L)]
-    grams = (
-        toks
-        .withColumn("__gh", F.xxhash64(*leads))
-        .withColumn("__n", F.count(F.lit(1)).over(per_doc))
-        # token pos 0..n-L are exactly the gram positions (0-based)
-        .filter(F.col("__pos") <= F.col("__n") - L)
-        .select(id_col, "__pos", "__gh")
-    )
-    win_min = by_pos.rowsBetween(0, W - 1)
-    return (
-        grams
-        .withColumn("__mn", F.min("__gh").over(win_min))
-        .withColumn("__gc", F.count(F.lit(1)).over(per_doc))
-        # full windows only; <W grams → the pos-0 window spans them all
-        .filter((F.col("__pos") <= F.col("__gc") - W)
-                | ((F.col("__gc") < W) & (F.col("__pos") == 0)))
-        .select(F.col(id_col), F.col("__mn").alias("__anchor"))
-        .dropDuplicates([id_col, "__anchor"])
     )
 
 

@@ -6,8 +6,7 @@ Logstash routes on tags in the output block
 downstream decoration on ``filter_matched`` only when all lookups
 succeeded (jdbc_static.rb:161-164). Here a Router splits one enriched
 DataFrame into per-sink DataFrames and writes each to a parquet/Iceberg
-sink partitioned by a time bucket, with salted repartitioning for hot
-conv_id keys (north_rule skew clause).
+sink partitioned by a time bucket.
 
 Routing modes:
 - ``exclusive=True`` (default): first matching route wins, remainder
@@ -15,11 +14,17 @@ Routing modes:
 - ``exclusive=False``: an event lands in every matching sink — multiple
   independent `if` blocks.
 
-Scale note: each sink write re-reads the enriched frame's lineage unless
-it is cached/persisted once; ``Router.write_all`` persists the enriched
-frame, fans out filters (cheap, codegen'd), and writes each partition-
-pruned sink. One shuffle per sink (the salted repartition) — unavoidable
-if sinks need bounded file counts; skew is neutralized by the salt.
+Write exchange: ``Router.write_all`` rebalances on the partition-dir
+columns (the ``rebalance`` hint, resolved by AQE at runtime). A dir is
+written by one task into one file until its shuffle data passes
+``spark.sql.adaptive.advisoryPartitionSizeInBytes``; above that,
+AQE's rebalance skew rule splits the dir by size, so a hot (sink, hour)
+spreads over several tasks and files in proportion to its bytes. The
+tradeoff: a dir below the advisory size is no longer spread over
+several writer tasks, so a batch whose rows fall in one small dir is
+written by one task. The exclusive path is a single pass (one exchange,
+one write, one ``observe()``); the multicast path persists the batch and
+writes each sink in turn.
 """
 
 from __future__ import annotations
@@ -29,8 +34,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from logstash_integration_jdbc_spark.operators.skew import salted_repartition
 
 
 @dataclass
@@ -83,16 +86,16 @@ class Router:
         df: DataFrame,
         base_dir: str,
         ts_col: str = "ts",
-        salt_col: str = "conv_id",
-        n_salts: int = 8,
         fmt: str = "parquet",
         run_id: str | None = None,
         extra_observe: dict[str, Column] | None = None,
         catalog_table: str | None = None,
     ) -> dict[str, int]:
-        """Write every sink, hour-partitioned and salt-spread; returns counts.
+        """Write every sink, hour-partitioned; returns per-sink row counts.
 
-        Sink layout: ``base_dir/<sink>/ts_hour=YYYY-MM-DD-HH[/run_id=…]``.
+        Sink layout: ``base_dir/sink=<name>/ts_hour=YYYY-MM-DD-HH[/run_id=…]``.
+        Each partition dir gets one file, or several when its data passes
+        the AQE advisory partition size (see the module docstring).
         With ``run_id`` (deterministic per batch, e.g. the starting
         watermark) and dynamic partition overwrite, a rerun of a failed
         batch rewrites exactly its own partitions → exactly-once sink
@@ -119,7 +122,7 @@ class Router:
             part_cols.append("run_id")
 
         if self.exclusive:
-            # single-pass fan-out: ONE salted shuffle + ONE write
+            # single-pass fan-out: ONE rebalance + ONE write
             # partitioned by (sink, ts_hour[, run_id]). Per-sink counts
             # ride along as observed metrics on the write action itself —
             # no second pass over the data.
@@ -136,12 +139,9 @@ class Router:
                 exprs.append(col.alias(alias))
             routed = routed.observe(obs, *exprs)
             all_parts = ["sink"] + part_cols
-            # (sink, ts_hour[, run_id], salt) partitioning WITHOUT the
-            # raw key column: each reduce task holds a few whole
-            # partition-dir groups, so output files ≈ dirs × salts
-            # rather than tasks × dirs (see salted_repartition).
-            out = salted_repartition(routed, key=salt_col, n_salts=n_salts,
-                                     extra_cols=all_parts, with_key=False)
+            # Rebalancing on the dir columns alone keeps each dir in one
+            # reduce task (one file) unless AQE splits it by size.
+            out = routed.hint("rebalance", *[F.col(c) for c in all_parts])
             if catalog_table is not None:
                 spark = out.sparkSession
                 if not spark.catalog.tableExists(catalog_table):
@@ -223,8 +223,7 @@ class Router:
         try:
             counts = {}
             for name, sink_df in self.split(df).items():
-                sink_df = salted_repartition(sink_df, key=salt_col, n_salts=n_salts,
-                                             extra_cols=part_cols, with_key=False)
+                sink_df = sink_df.hint("rebalance", *[F.col(c) for c in part_cols])
                 path = os.path.join(base_dir, f"sink={name}")
                 n = sink_df.count()
                 if n > 0:

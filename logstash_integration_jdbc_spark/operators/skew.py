@@ -47,11 +47,12 @@ def salted_repartition(
     spreads n_salts-wide): partitioning degenerates to the
     (extra_cols, salt) group key, so each reduce task holds only the few
     groups that hash to it instead of a slice of EVERY group. For a
-    dynamic-partitioned write that is the difference between
-    O(groups) and O(tasks × groups) output files (guide §6 small-files;
-    measured 1572 → ~170 files and −45% write wall on the 1M-row
-    pipeline sink). Keep ``with_key=True`` when downstream needs rows of
-    one key clustered or a uniform row-level spread.
+    dynamic-partitioned write that bounds output files at
+    groups × n_salts instead of tasks × groups (guide §6 small-files),
+    whatever each group's size. A write that should size its files by
+    bytes wants a rebalance on ``extra_cols`` instead, as
+    ``Router.write_all`` does. Keep ``with_key=True`` when downstream
+    needs rows of one key clustered or a uniform row-level spread.
     """
     unhashable = ("map<", "variant")  # types xxhash64 rejects
     row_cols = [c for c in ("turn_idx", "ts") if c in df.columns] or [

@@ -10,7 +10,8 @@ with defaults/tags → tag-routed fan-out) with Spark-native physics:
   Python (north_star "no per-row Python");
 - enrich: broadcast hash joins with jdbc_static semantics (J2/J4/R1-R3)
   against max_rows-guarded dimensions (S9);
-- route: tag/predicate fan-out to hour-partitioned, salt-spread sinks (R4);
+- route: tag/predicate fan-out to hour-partitioned sinks, one file per
+  partition dir unless AQE splits a large dir by size (R4);
 - aggregate: per-sink (role, tool, hour) counts — map-side partial agg;
 - checkpoint: scalar max-ts watermark + per-partition cursors written
   atomically ONLY after all sinks committed (at-least-once, S3).
@@ -93,7 +94,6 @@ class PipelineConfig:
     clean_run: bool = False
     record_last_run: bool = True
     tracking_column: str = "ts"
-    n_salts: int = 8
     max_dim_rows: int = 1_000_000
     # Aggregate-input policy. True (default): read the just-written sinks
     # back, pruned to 4 columns — measured fastest on local disk. False:
@@ -196,7 +196,7 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict[str, Any]:
     # exactly its own sink partitions.
     run_id = _fmt_run_id(tracker.value)
 
-    # Single-pass fan-out: one salted shuffle, one write partitioned by
+    # Single-pass fan-out: one rebalance exchange, one write partitioned by
     # (sink, ts_hour, run_id). No persist — the parse/enrich stages are
     # map-only and recomputing them for the (tiny-output) aggregate pass
     # is the 100 TB-correct tradeoff vs caching the whole batch.
@@ -212,8 +212,7 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict[str, Any]:
     sink_counts = with_retries(
         lambda: router.write_all(
             enriched, os.path.join(cfg.out_dir, "sinks"),
-            ts_col="ts", salt_col="conv_id", n_salts=cfg.n_salts,
-            run_id=run_id,
+            ts_col="ts", run_id=run_id,
             extra_observe={
                 "rows": F.count(F.lit(1)),
                 "parse_hits": F.sum(F.col("parse_ok").cast("long")),

@@ -167,8 +167,7 @@ def run_streaming_pipeline(
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         router.write_all(
             batch_df, os.path.join(out_dir, "sinks"),
-            ts_col="ts", salt_col="conv_id",
-            run_id=f"batch{batch_id}",
+            ts_col="ts", run_id=f"batch{batch_id}",
         )
         agg = hourly_counts(
             batch_df.withColumn("sink", router.sink_expr()),

@@ -777,14 +777,65 @@ def test_band_bucket_udf_evaluated_once(docs, spark):
     assert plan.count("ArrowEvalPython") == 1
 
 
+def winnow_anchors_expr(df, id_col="doc_id", text_col="text",
+                        min_tokens=10, window=4):
+    """Window/sort reference formulation of ``winnow_anchors`` (the
+    parity tests below pin the kernel to it).
+
+    Plan notes (kept for the record): NO higher-order functions — an
+    array formulation (transform over sequence + array_min of slices)
+    was measured 40× slower end-to-end because projection collapse
+    inlines the gram array into the window transform, re-evaluating the
+    whole gram pipeline per window element (186 s → 6 s at 1000 docs).
+    Token hashes posexplode once per doc; gram hash =
+    ``xxhash64(t, lead(t,1), …, lead(t,L-1))``, winnow min = windowed
+    ``min`` over the next ``window`` gram rows; all three window
+    functions share one (id, pos) sort whose hash partition comes from
+    ``_spread``'s forced repartition.
+    """
+    from pyspark.sql import Window
+
+    from logstash_integration_jdbc_spark.operators.dedup import (
+        _spread,
+        token_hashes,
+    )
+
+    L, W = min_tokens, window
+    src = _spread(df, id_col, text_col, force=True)
+    toks = src.select(
+        F.col(id_col),
+        F.posexplode(token_hashes(F.col(text_col))).alias("__pos", "__t"),
+    )
+    per_doc = Window.partitionBy(id_col)
+    by_pos = per_doc.orderBy("__pos")
+    leads = [F.col("__t")] + [F.lead("__t", j).over(by_pos)
+                              for j in range(1, L)]
+    grams = (
+        toks
+        .withColumn("__gh", F.xxhash64(*leads))
+        .withColumn("__n", F.count(F.lit(1)).over(per_doc))
+        # token pos 0..n-L are exactly the gram positions (0-based)
+        .filter(F.col("__pos") <= F.col("__n") - L)
+        .select(id_col, "__pos", "__gh")
+    )
+    win_min = by_pos.rowsBetween(0, W - 1)
+    return (
+        grams
+        .withColumn("__mn", F.min("__gh").over(win_min))
+        .withColumn("__gc", F.count(F.lit(1)).over(per_doc))
+        # full windows only; <W grams → the pos-0 window spans them all
+        .filter((F.col("__pos") <= F.col("__gc") - W)
+                | ((F.col("__gc") < W) & (F.col("__pos") == 0)))
+        .select(F.col(id_col), F.col("__mn").alias("__anchor"))
+        .dropDuplicates([id_col, "__anchor"])
+    )
+
+
 def test_winnow_kernel_matches_window_reference(spark, testdata):
     # r6: winnow_anchors moved to a fused Arrow kernel; it must produce
     # exactly the window/sort reference's (id, anchor) set — including
     # short docs (no grams), few-gram docs (single min), dup anchors.
-    from logstash_integration_jdbc_spark.operators.dedup import (
-        winnow_anchors,
-        winnow_anchors_expr,
-    )
+    from logstash_integration_jdbc_spark.operators.dedup import winnow_anchors
 
     docs = spark.read.parquet(testdata("sf0.01/documents.parquet"))
     texts = [(200001, "short doc"), (200002, " ".join(["tok"] * 10)),
@@ -806,10 +857,7 @@ def test_winnow_kernel_short_docs_when_window_exceeds_min_tokens(spark):
     # min of its own grams, as in the window/sort reference.
     import random
 
-    from logstash_integration_jdbc_spark.operators.dedup import (
-        winnow_anchors,
-        winnow_anchors_expr,
-    )
+    from logstash_integration_jdbc_spark.operators.dedup import winnow_anchors
 
     rng = random.Random(5)
     docs = spark.createDataFrame(

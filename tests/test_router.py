@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 import pytest
@@ -52,7 +53,7 @@ def test_duplicate_sink_names_rejected():
 def test_write_layout_hour_partitioned(spark, tmp_path, transcripts):
     df = transcripts.limit(2000).withColumn("tags", F.array().cast("array<string>"))
     r = Router([Route("all", F.lit(True))], default_sink=None)
-    counts = r.write_all(df, str(tmp_path), n_salts=4)
+    counts = r.write_all(df, str(tmp_path))
     assert counts["all"] == 2000
     parts = os.listdir(str(tmp_path / "sink=all"))
     assert any(p.startswith("ts_hour=") for p in parts)
@@ -174,11 +175,11 @@ def test_iceberg_catalog_table_end_to_end(tmp_path):
                         default_sink="other")
         tbl = "ice.db.sinks"
         counts = router.write_all(df, base_dir="", catalog_table=tbl,
-                                  run_id="r1", n_salts=2)
+                                  run_id="r1")
         assert spark.table(tbl).count() == sum(counts.values()) == 100
         # rerun same run_id → V2 overwritePartitions, not duplication
         router.write_all(df, base_dir="", catalog_table=tbl,
-                         run_id="r1", n_salts=2)
+                         run_id="r1")
         assert spark.table(tbl).count() == 100
         # Iceberg metadata must exist (proves the V2 path, not a v1 fallback)
         assert (tmp_path / "wh" / "db" / "sinks" / "metadata").exists()
@@ -188,20 +189,24 @@ def test_iceberg_catalog_table_end_to_end(tmp_path):
 
 def test_salted_repartition_with_key_false_spreads_and_bounds_files(
         spark, tmp_path, transcripts):
-    # r6 optimization: the router's write exchange keys on
-    # (partition dirs, salt) WITHOUT the raw conv_id column, so each
-    # reduce task holds whole (dir, salt) groups → every partition dir
-    # gets at most n_salts files instead of O(tasks) files.
+    # The router's write exchange rebalances on the partition-dir
+    # columns alone, so a dir below the AQE advisory size lands in one
+    # reduce task → exactly one file per dir, for the single-pass
+    # exclusive write and for each sink of the multicast write.
     df = transcripts.limit(4000).withColumn("tags", F.array().cast("array<string>"))
-    r = Router([Route("all", F.lit(True))], default_sink=None)
-    n_salts = 4
-    counts = r.write_all(df, str(tmp_path), n_salts=n_salts)
-    assert counts["all"] == 4000
-    base = tmp_path / "sink=all"
-    for hour_dir in os.listdir(base):
-        files = [f for f in os.listdir(base / hour_dir)
-                 if f.endswith(".parquet")]
-        assert 0 < len(files) <= n_salts, (hour_dir, files)
+    for exclusive in (True, False):
+        r = Router([Route("all", F.lit(True))], default_sink=None,
+                   exclusive=exclusive)
+        out_dir = tmp_path / f"exclusive={exclusive}"
+        counts = r.write_all(df, str(out_dir))
+        assert counts["all"] == 4000
+        base = out_dir / "sink=all"
+        hour_dirs = os.listdir(base)
+        assert len(hour_dirs) > 1
+        for hour_dir in hour_dirs:
+            files = [f for f in os.listdir(base / hour_dir)
+                     if f.endswith(".parquet")]
+            assert len(files) == 1, (exclusive, hour_dir, files)
     # the hot-key spread is preserved: the salt still derives from the
     # key + row columns, so one hot conv_id spans several salts
     hot = df.withColumn("conv_id", F.lit("hot"))
@@ -227,3 +232,44 @@ def test_salted_repartition_spreads_hot_key_without_row_columns(spark):
     placed = out.select("payload", F.spark_partition_id().alias("p"))
     assert placed.exceptAll(
         again.select("payload", F.spark_partition_id().alias("p"))).count() == 0
+
+
+@contextlib.contextmanager
+def _sql_conf(spark, **conf):
+    prev = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+
+
+def test_write_all_splits_dir_above_advisory_size(spark, tmp_path):
+    # A dir whose shuffle data passes the advisory partition size is
+    # split by AQE's rebalance skew rule over several tasks and files;
+    # the split moves no row between dirs.
+    from logstash_integration_jdbc_spark.sources.generator import gen_transcripts
+
+    src = str(tmp_path / "src")
+    gen_transcripts(spark, n_rows=100_000, seed=7).repartition(4).write.parquet(src)
+    df = spark.read.parquet(src).withColumn("tags", F.array().cast("array<string>"))
+    assert len([f for f in os.listdir(src) if f.endswith(".parquet")]) >= 4
+    r = Router([Route("all", F.lit(True))], default_sink=None)
+    with _sql_conf(spark, **{
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "256k",
+            "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k"}):
+        counts = r.write_all(df, str(tmp_path / "out"))
+    assert counts["all"] == 100_000
+    base = tmp_path / "out" / "sink=all"
+    files = {d: [f for f in os.listdir(base / d) if f.endswith(".parquet")]
+             for d in os.listdir(base)}
+    assert max(len(fs) for fs in files.values()) > 1, files
+    want = {r2.h: r2.n for r2 in df.groupBy(
+        F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd-HH").alias("h"))
+        .agg(F.count(F.lit(1)).alias("n")).collect()}
+    got = {r2.ts_hour: r2.n for r2 in spark.read.parquet(str(base))
+           .groupBy(F.col("ts_hour").cast("string").alias("ts_hour"))
+           .agg(F.count(F.lit(1)).alias("n")).collect()}
+    assert got == want
